@@ -345,6 +345,10 @@ final class TsdbEngine(
     case DropTable(name, ifExists) =>
       invalidateRollups(name)
       catalog.drop(name, ifExists)
+      // a recreated table must not inherit stale supersession times (its
+      // generations would skip their grace); the table monitor stays —
+      // a writer may be waiting on it
+      supersededAtMs.keySet.removeIf(_._1 == name)
       spark.catalog.dropTempView(name) // a stale view would read deleted files
       affectedRows(0)
     case DescribeTable(name) => describe(name)
@@ -610,8 +614,17 @@ final class TsdbEngine(
     * into the new `__segment` directories. Mirrors the reference's sampling
     * memtable flush (instance/flush_compaction.rs:355-400 + sampler.rs).
     * A no-op once `segment_duration` is set: appends are already durable
-    * parquet here, so there is nothing else a flush must persist. */
-  def flush(name: String, nowMs: Long = System.currentTimeMillis()): Unit = {
+    * parquet here, so there is nothing else a flush must persist.
+    *
+    * The whole body holds the table monitor (reentrant, so the nested
+    * [[compact]] is fine): an append landing between the sampling and the
+    * layout flip would write `__segment=` directories into the still
+    * unsegmented generation, and the re-layout's scan of that mixed tree
+    * drops the older files. */
+  def flush(name: String, nowMs: Long = System.currentTimeMillis()): Unit =
+    withTableLock(name)(sampleAndRelayout(name, nowMs))
+
+  private def sampleAndRelayout(name: String, nowMs: Long): Unit = {
     val s = catalog.get(name)
     if (s.options.segmentDuration.nonEmpty) return
     val storage = readStorage(s)

@@ -266,6 +266,44 @@ object Decontaminate {
     hit.unionByName(untouched)
   }
 
+  /** Near-dup contamination: corpus documents that are MinHash near-dups
+    * of a benchmark item — the paraphrase-level leak the exact-n-gram
+    * check ([[contaminated]]) misses and the embedding check
+    * ([[semanticContamination]]) needs vectors for. The standard lexical
+    * middle ground (GPT-3/Llama-style fuzzy contamination analysis):
+    * shingle BOTH sides, md5-portable MinHash signatures
+    * ([[graft.functions.MinHashSig]] — the q55 SQL-replayable family),
+    * banded bucket join corpus×bench, exact Jaccard verify — the
+    * two-sided mode of the [[SimJoin]] kernel.
+    *
+    * Tokenization matches [[Dedup.minhashNearDupPairs]] (raw
+    * whitespace tokens, NOT lowercased) so the corpus near-dup and
+    * contamination passes agree on what "near duplicate" means.
+    *
+    * 100 TB posture: the bench side is benchmark-sized → its banded keys
+    * and hashed shingle sets BROADCAST; corpus shingles/signatures are computed
+    * map-only and only band-bucket collisions reach the verify — never
+    * all-pairs, and corpus text never shuffles (ids + band keys only).
+    *
+    * Output: one row per contaminated (corpus id, bench id) pair with
+    * the exact jaccard. */
+  def nearDupContaminated(
+      corpus: DataFrame, idCol: String, textCol: String,
+      bench: DataFrame, benchIdCol: String, benchTextCol: String,
+      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
+      threshold: Double = 0.8): DataFrame = {
+    def prep(df: DataFrame, id: String, text: String) =
+      SimJoin.pin(SimJoin.prep(df, Seq(col(id).as("k")), col(text),
+        shingleK, numHashes, bands))
+    // one pass each; reused by the candidate join AND the verify join
+    val corpusSide = prep(corpus.repartition(col(idCol)), idCol, textCol)
+    val benchSide = prep(bench, benchIdCol, benchTextCol).copy(broadcast = true)
+    SimJoin.join(corpusSide, benchSide, SimJoin.atLeast(threshold),
+        broadcastB = true)
+      .select(col("k_a").as(idCol), col("k_b").as("bench_id"),
+        round(SimJoin.jaccard(col("inter"), col("union")), 4).as("jaccard"))
+  }
+
   /** SEMANTIC decontamination: training vectors whose embedding is
     * near-identical to any benchmark/test vector (paraphrased test
     * leakage that n-gram overlap misses — the embedding-space
@@ -280,65 +318,6 @@ object Decontaminate {
     * ([[Similarity.nearDupPairs]]) it complements at corpus×corpus scale.
     *
     * Output per contaminated train id: hit count and max cosine. */
-  /** Near-dup contamination: corpus documents that are MinHash near-dups
-    * of a benchmark item — the paraphrase-level leak the exact-n-gram
-    * check ([[contaminated]]) misses and the embedding check
-    * ([[semanticContamination]]) needs vectors for. The standard lexical
-    * middle ground (GPT-3/Llama-style fuzzy contamination analysis):
-    * shingle BOTH sides, md5-portable MinHash signatures
-    * ([[graft.functions.MinHashSig]] — the q55 SQL-replayable family),
-    * banded bucket join corpus×bench, exact shingle-jaccard verify.
-    *
-    * Tokenization matches [[Dedup.minhashNearDupPairs]] (raw
-    * whitespace tokens, NOT lowercased) so the corpus near-dup and
-    * contamination passes agree on what "near duplicate" means.
-    *
-    * 100 TB posture: the bench side is benchmark-sized → its banded keys
-    * and shingle sets BROADCAST; corpus shingles/signatures are computed
-    * map-only and only band-bucket collisions reach the verify — never
-    * all-pairs, and corpus text never shuffles (ids + band keys only).
-    *
-    * Output: one row per contaminated (corpus id, bench id) pair with
-    * the exact jaccard. */
-  def nearDupContaminated(
-      corpus: DataFrame, idCol: String, textCol: String,
-      bench: DataFrame, benchIdCol: String, benchTextCol: String,
-      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    import graft.pipeline.TextAnalysis.{minhashBands, minhashSignature, shingles}
-    val rows = numHashes / bands
-    def sig(df: DataFrame, id: String, text: String): DataFrame =
-      df.select(col(id).as("id"),
-          array_distinct(shingles(col(text), shingleK)).as("sh"))
-        .withColumn("bandkeys",
-          minhashBands(minhashSignature(col("sh"), numHashes), bands, rows))
-    // one pass each; reused by the candidate join AND the verify join
-    val corpusSig = corpus.repartition(col(idCol))
-      .transform(d => sig(d, idCol, textCol)).localCheckpoint()
-    val benchSig = sig(bench, benchIdCol, benchTextCol).localCheckpoint()
-
-    val corpusBands = corpusSig.select(col("id"),
-      posexplode(col("bandkeys")).as(Seq("band", "key")))
-    val benchBands = benchSig.select(col("id").as("bench_id"),
-      posexplode(col("bandkeys")).as(Seq("band", "key")))
-    // candidates carry IDS only (shingle arrays join in afterwards, once
-    // per distinct pair, not once per colliding band)
-    val candidates = corpusBands
-      .join(broadcast(benchBands), Seq("band", "key"))
-      .select(col("id"), col("bench_id"))
-      .distinct()
-    candidates
-      .join(corpusSig.select(col("id"), col("sh")), "id")
-      .join(broadcast(benchSig.select(col("id").as("bench_id"),
-        col("sh").as("bench_sh"))), "bench_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh"), col("bench_sh"))).cast("double") /
-        size(array_union(col("sh"), col("bench_sh"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id").as(idCol), col("bench_id"),
-        round(col("jaccard"), 4).as("jaccard"))
-  }
-
   def semanticContamination(
       train: DataFrame, trainIdCol: String, trainEmbCol: String,
       bench: DataFrame, benchEmbCol: String,

@@ -17,12 +17,12 @@ object Dedup {
     df.groupBy(col(textCol))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
 
-  /** MinHash-LSH near-duplicate candidate pairs (Broder minhash + banding).
-    *
-    * Pipeline: signature (per-doc, map-only) → explode band keys → shuffle
-    * by (band, key) → pairs within buckets → exact shingle-Jaccard verify →
-    * threshold. At scale the only quadratic work is within a bucket, and a
-    * bucket only collects docs that already agree on a full band.
+  /** MinHash-LSH near-duplicate pairs (Broder minhash + banding) through
+    * the [[SimJoin]] kernel: signature (per-doc, map-only) → band keys →
+    * shuffle by (band, key) → pairs within buckets → exact Jaccard verify
+    * over the sorted hashed shingle sets → threshold. At scale the only
+    * quadratic work is within a bucket, and a bucket only collects docs
+    * that already agree on a full band.
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b, deduped across bands.
     */
@@ -30,42 +30,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    val rows = numHashes / bands
-    // Shingle set materialized once; the signature is a single-pass native
-    // expression over it (the HOF formulation re-derived the shingles per
-    // hash slot — quadratic interpreted work per doc).
-    // localCheckpoint, not cache(): CacheManager pins cache() blocks until an
-    // explicit unpersist (which a lazily-returned result can't schedule), so
-    // repeated calls in a long session would accumulate storage. Checkpoint
-    // blocks are released by the ContextCleaner once the result is dropped.
     // repartition first: a small corpus file is one scan partition, which
-    // would serialize the signature computation on a single core.
-    val docs = df.repartition(col(idCol))
-      .select(col(idCol).as("id"),
-        array_distinct(shingles(col(textCol), shingleK)).as("sh"))
-      .withColumn("bandkeys",
-        minhashBands(minhashSignature(col("sh"), numHashes), bands, rows))
-      .localCheckpoint()
-
-    val banded = docs.select(col("id"),
-      posexplode(col("bandkeys")).as(Seq("band", "key")))
-    val a = banded.as("a")
-    val b = banded.as("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-
-    val withSets = candidates
-      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-    withSets
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    // would serialize the signature computation on a single core
+    val docs = SimJoin.pin(SimJoin.prep(df.repartition(col(idCol)),
+      Seq(col(idCol).as("k")), col(textCol), shingleK, numHashes, bands))
+    SimJoin.selfJoin(docs, SimJoin.atLeast(threshold))
+      .select(col("k_a").as("id_a"), col("k_b").as("id_b"),
+        round(SimJoin.jaccard(col("inter"), col("union")), 4).as("jaccard"))
   }
 
   /** SimHash near-dup candidate pairs: 64-bit fingerprints, banded into
@@ -204,7 +175,7 @@ object Dedup {
       .select(cols: _*)
       .withColumn("ntok", size(col("sh")))
       .withColumn("v", sort_array(transform(col("sh"), t => xxhash64(t))))
-      .localCheckpoint() // not cache(): see minhashNearDupPairs
+      .localCheckpoint() // not cache(): see SimJoin.pin
     val postCols = Seq(col("id"), col("lang"), col("ntok")) ++
       (if (withLenb) Seq(col("lenb")) else Nil)
     val posting = docs.select(postCols :+ explode(col("sh")).as("tok"): _*)
@@ -494,29 +465,15 @@ object Dedup {
     // signatures are band-independent: ONE shingle+signature pass over
     // the sample is shared by every configuration (recomputing it per
     // config dominated the sweep's cost)
-    val sigs = df.filter(TextAnalysis.sampleBucket(
-        concat(col(idCol).cast("string"), lit(":lshsweep")), 100) < samplePct)
-      .repartition(col(idCol))
-      .select(col(idCol).as("id"),
-        array_distinct(TextAnalysis.shingles(col(textCol), shingleK)).as("sh"))
-      .withColumn("sig", TextAnalysis.minhashSignature(col("sh"), numHashes))
-      .localCheckpoint()
-    def pairsAt(bands: Int): Long = {
-      val banded = sigs.select(col("id"), posexplode(
-        TextAnalysis.minhashBands(col("sig"), bands, numHashes / bands))
-        .as(Seq("band", "key")))
-      val candidates = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      candidates
-        .join(sigs.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(sigs.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-        .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))) >= threshold)
-        .count()
-    }
+    val sigs = SimJoin.pin(SimJoin.sets(
+      df.filter(TextAnalysis.sampleBucket(
+          concat(col(idCol).cast("string"), lit(":lshsweep")), 100) < samplePct)
+        .repartition(col(idCol)),
+      Seq(col(idCol).as("k")), col(textCol), shingleK, numHashes))
+    def pairsAt(bands: Int): Long =
+      SimJoin.selfJoin(sigs.copy(df = sigs.df.withColumn("bandkeys",
+        SimJoin.bandKeys(col("sig"), numHashes, bands))),
+        SimJoin.atLeast(threshold)).count()
     val refN = pairsAt(numHashes)
     val rows = bandsChoices.filter(numHashes % _ == 0).sorted.map { b =>
       val n = pairsAt(b)

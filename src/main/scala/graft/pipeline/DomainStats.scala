@@ -290,8 +290,8 @@ object DomainStats {
       jacNum: Int = 4, jacDen: Int = 5,
       membersOpt: Option[DataFrame] = None): DataFrame = {
     val keys = occKeys(docs, urlCol, idCol, textCol, grain)
-    val members = membersOpt.getOrElse(fuzzyClusterMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain), idCol,
+    val members = membersOpt.getOrElse(fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Seq("__domain"),
       shingleK, numHashes, bands, jacNum, jacDen))
     val perCluster = members
       .groupBy(col("__domain"), col("cluster_id"))
@@ -361,27 +361,8 @@ object DomainStats {
       .select(col(idCol), col("__domain"), md5(col("__para")).as("ph"),
         col("__para"))
 
-  /** Within-domain fuzzy-cluster membership: one row per distinct
-    * (domain, ph) that belongs to some near-dup component, with its
-    * representative text and internal cluster_id (see
-    * [[fuzzyTemplateCatalog]] for the full semantics and operating-point
-    * discussion; this is its clustering core, shared with
-    * [[domainFuzzyBoilerplate]]).
-    *
-    * Skew escape hatch (not wired by default): the banded self-join is
-    * quadratic only IN-BUCKET, and buckets are (domain, band, key) — so a
-    * pathological single-domain template mill with millions of distinct
-    * near-identical paragraphs would concentrate one domain's buckets on
-    * a few tasks. The named fallback is the q295 salted two-phase shape
-    * ([[UrlCanon.capDeduped]]'s salt): append a paragraph-hash prefix to
-    * the band key to shard each bucket, take the union of the per-salt
-    * verified edges, and let CC re-merge — exact verification makes the
-    * split lossy only for pairs a salt separates, which a second
-    * rotated-salt pass recovers; the size-ratio prefilter and per-domain
-    * banding keep real corpora far from needing it. */
   /** Plan-folded 64-bit key-collision guard — the loud-fail posture for
-    * hash-keyed CC, shared by [[fuzzyClusterMembers]] and
-    * [[fuzzySyndicationCatalog]]: a 1-row assert_true aggregate over
+    * hash-keyed CC, shared by both clusterings of [[fuzzyMembers]]: a 1-row assert_true aggregate over
     * `frame` (count(*) must equal the distinct count of `key`, which
     * holds iff the 64-bit hash is collision-free on this corpus),
     * broadcast-crossed into `out` and kept ALIVE by a filter so column
@@ -395,113 +376,61 @@ object DomainStats {
     out.crossJoin(broadcast(g)).filter(col("__kc").isNull).drop("__kc")
   }
 
-  /** Broadcast bound for the exact-verify lookup side: ~2^17 distinct
-    * paragraphs × (8 B key + a few hundred bytes of hashed-token array)
-    * ≈ tens of MB framed — safely inside one executor's budget, and the
-    * single-threaded BroadcastExchange build stays sub-second at this
-    * row count (the ngramJaccardPairs caveat about array-heavy
-    * broadcasts kicks in orders of magnitude later). Beyond it the
-    * verify falls back to the planner's shuffled join over the same
-    * narrow long keys — the 100 TB shape. */
-  private val FuzzyVerifyBroadcastMaxRows = 131072L
-
-  /** Shared LSH candidate + exact-verify edge builder for the fuzzy
-    * clustering cores: banded self-join over `dp` (one row per
-    * clustering key, carrying `v` = SORTED xxhash64'd token set and
-    * `bandkeys`), keyed THROUGHOUT by `keyHash` — the same 64-bit key
-    * CC runs on, so candidate pairs shuffle two LONGS instead of two
-    * md5 strings (guide §2.3: narrower types; the callers' plan-folded
-    * collision guard makes hash keying loud-fail safe). `bucketCols`
-    * adds equality columns to the band bucket (the per-domain variant).
+  /** Fuzzy paragraph-cluster membership — the clustering core of both
+    * fuzzy families: one row per distinct (`buckets`…, ph) paragraph that
+    * belongs to some near-dup component, with its representative text
+    * and internal `cluster_id`. `buckets = Seq("__domain")` is the
+    * within-domain clustering of [[fuzzyTemplateCatalog]] /
+    * [[domainFuzzyBoilerplate]] (band buckets and components never cross
+    * domains); `Nil` is the GLOBAL clustering of
+    * [[fuzzySyndicationCatalog]] / [[fuzzySyndicationStrip]].
     *
-    * Size-ratio prefilter: J >= jacNum/jacDen implies min(|A|,|B|)·jacDen
-    * >= max(|A|,|B|)·jacNum (J <= min/max), so it only drops candidates
-    * exact verification would reject anyway — the oracle replays the
-    * verified pair set without needing the prefilter.
+    * The distinct-paragraph frame is the [[SimJoin]] prep: text crosses
+    * the wire once (min() is exact — all occurrences of a ph are
+    * byte-identical), and the pinned frame carries the sorted hashed
+    * token set `v` for the merge-intersection verify and the 64-bit key
+    * `k` = xxhash64(buckets…, ph) that the banded self-join, the verify
+    * lookups and CC all run on — candidate pairs shuffle two LONGS
+    * instead of two md5 strings (measured at sf0.1, the global build's
+    * candidate explosion is 9.2 M pairs from 18.5 k paragraphs with
+    * 21.7 k verified survivors). CC on LONG keys takes its union-find
+    * contraction path (the string-keyed generic loop cost ~6 s of
+    * per-iteration overhead on a 1.2 k-edge fixture graph). The internal
+    * label is hash-valued and NEVER surfaces: the cluster NAME is
+    * min(ph) over the component's members, which the oracle reproduces
+    * from its own string-keyed closure. A collision between two distinct
+    * keys would SILENTLY merge unrelated clusters; the frame is one row
+    * per key by construction, so [[hashKeyGuarded]]'s count equality is
+    * exactly the collision-freedom check.
     *
-    * Exact verify: |A∩B| via [[graft.functions.SortedIntersectSize]]
-    * (allocation-free merge over the sorted hashed token sets — the
-    * ngramJaccardPairs kernel) with |A∪B| = n_a + n_b − |A∩B|; integer
-    * arithmetic throughout. The (h, v) lookup side is BROADCAST when dp
-    * is small enough that the build is trivial — the candidate pairs
-    * (the measured 9 M-row, 0.4%-precision explosion at sf0.1) then
-    * never cross an exchange at all (guide §3.1/§3.2: reduce/avoid
-    * shuffling the big side). Returns verified (id_a, id_b) hash pairs. */
-  private def fuzzyVerifiedEdges(
-      dp: DataFrame, keyHash: Column, bucketCols: Seq[String],
-      jacNum: Int, jacDen: Int): DataFrame = {
-    val banded = dp.select(
-      bucketCols.map(col) ++ Seq(keyHash.as("h"), size(col("v")).as("sz"),
-        posexplode(col("bandkeys")).as(Seq("band", "key"))): _*)
-    val joinCond = (bucketCols.map(c => col(s"a.$c") === col(s"b.$c")) ++ Seq(
-      col("a.band") === col("b.band"), col("a.key") === col("b.key"),
-      col("a.h") < col("b.h"),
-      least(col("a.sz"), col("b.sz")) * jacDen >=
-        greatest(col("a.sz"), col("b.sz")) * jacNum)).reduce(_ && _)
-    val cand = banded.as("a").join(banded.as("b"), joinCond)
-      .select(col("a.h").as("h_a"), col("b.h").as("h_b"))
-      .distinct()
-    val dpV = dp.select(keyHash.as("h"), col("v"), size(col("v")).as("n"))
-    val small = dp.count() <= FuzzyVerifyBroadcastMaxRows
-    def side(suffix: String) = {
-      val s = dpV.select(col("h").as(s"h_$suffix"), col("v").as(s"v_$suffix"),
-        col("n").as(s"n_$suffix"))
-      if (small) broadcast(s) else s
-    }
-    cand.join(side("a"), Seq("h_a")).join(side("b"), Seq("h_b"))
-      .withColumn("__inter",
-        graft.functions.SortedIntersectSize(col("v_a"), col("v_b")))
-      .filter(col("__inter") * jacDen >=
-        (col("n_a") + col("n_b") - col("__inter")) * jacNum)
-      .select(col("h_a").as("id_a"), col("h_b").as("id_b"))
-  }
-
-  private def fuzzyClusterMembers(
-      occ: DataFrame, idCol: String, shingleK: Int,
+    * Skew escape hatch (not wired by default): the banded self-join is
+    * quadratic only IN-BUCKET — so a pathological single-domain template
+    * mill with millions of distinct near-identical paragraphs would
+    * concentrate its buckets on a few tasks. The named fallback is the
+    * q295 salted two-phase shape ([[UrlCanon.capDeduped]]'s salt): append
+    * a paragraph-hash prefix to the band key to shard each bucket, take
+    * the union of the per-salt verified edges, and let CC re-merge —
+    * exact verification makes the split lossy only for pairs a salt
+    * separates, which a second rotated-salt pass recovers; the size-ratio
+    * prefilter and per-domain banding keep real corpora far from needing
+    * it. */
+  private def fuzzyMembers(
+      occ: DataFrame, buckets: Seq[String], shingleK: Int,
       numHashes: Int, bands: Int, jacNum: Int, jacDen: Int): DataFrame = {
-    // distinct paragraph per domain: text crosses the wire once (min() is
-    // exact — all occurrences of a ph are byte-identical); shingles, the
-    // sorted hashed token set and band keys are single-pass kernels over
-    // the distinct frame. Pinned: the frame feeds the banded self-join
-    // AND the verify lookups. The checkpoint carries `v` (sorted
-    // xxhash64'd tokens) instead of the string shingle array — narrower,
-    // and the verify kernel is a merge intersection over it. 64-bit
-    // token collisions shift a jaccard by <= 1/|union| with probability
-    // ~|vocab|²/2⁶⁴ — the accepted ngramJaccardPairs trade (q54/q87),
-    // re-verified against the exact-string oracles at both gate scales.
-    val dp = occ.groupBy("__domain", "ph")
-      .agg(min(col("__para")).as("para"))
-      .withColumn("sh",
-        array_distinct(TextAnalysis.shingles(col("para"), shingleK)))
-      .withColumn("v", sort_array(transform(col("sh"), t => xxhash64(t))))
-      .withColumn("bandkeys", TextAnalysis.minhashBands(
-        TextAnalysis.minhashSignature(col("sh"), numHashes),
-        bands, numHashes / bands))
-      .drop("sh")
-      .localCheckpoint()
-    // CC below runs on xxhash64(domain, ph) LONGS (the union-find fast
-    // path), and a collision between two distinct (domain, ph) pairs
-    // would SILENTLY merge unrelated clusters — even across domains,
-    // since CC sees bare hashes. dp is one row per (domain, ph) by
-    // construction, so [[hashKeyGuarded]]'s count equality is exactly
-    // the collision-freedom check (which also covers the verify joins
-    // and candidate pairs now keyed by the same hash).
-    val edges = fuzzyVerifiedEdges(dp,
-      xxhash64(col("__domain"), col("ph")), Seq("__domain"), jacNum, jacDen)
-    // LONG vertex keys (xxhash64 of (domain, ph) — pairs never cross
-    // domains) so connectedComponents takes its union-find contraction
-    // path: the string-keyed generic loop cost ~6 s of per-iteration
-    // fixed overhead on a 1.2 k-edge fixture graph. The internal label is
-    // hash-valued and NEVER surfaces: the cluster NAME is min(ph) over
-    // the component's members, which the oracle reproduces from its own
-    // string-keyed closure — component sets are equal, labels need not be.
+    val keyCols = (buckets :+ "ph").map(col)
+    val dp = SimJoin.pin(SimJoin.prep(
+      occ.groupBy(keyCols: _*).agg(min(col("__para")).as("para")),
+      keyCols ++ Seq(col("para"), xxhash64(keyCols: _*).as("k")), col("para"),
+      shingleK, numHashes, bands))
+    val edges = SimJoin.selfJoin(dp, SimJoin.atLeast(jacNum, jacDen), buckets)
+      .select(col("k_a").as("id_a"), col("k_b").as("id_b"))
     val cc = Dedup.connectedComponents(edges)
-    hashKeyGuarded(dp, xxhash64(col("__domain"), col("ph")),
-      "xxhash64(domain, ph) collision: fuzzy clustering would merge " +
+    val key = (buckets.map(_.stripPrefix("__")) :+ "ph").mkString(", ")
+    hashKeyGuarded(dp.df, col("k"),
+      s"xxhash64($key) collision: fuzzy clustering would merge " +
         "unrelated clusters — use string-keyed CC for this corpus") {
-      dp.withColumn("id", xxhash64(col("__domain"), col("ph")))
-        .join(cc, Seq("id"))
-        .select(col("__domain"), col("ph"), col("para"), col("cluster_id"))
+      dp.df.join(cc.withColumnRenamed("id", "k"), Seq("k"))
+        .select(keyCols ++ Seq(col("para"), col("cluster_id")): _*)
     }
   }
 
@@ -550,8 +479,8 @@ object DomainStats {
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select(col("__domain"), col("ph"), lit(1L).as("__ex"))
-    val members = membersOpt.getOrElse(fuzzyClusterMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain), idCol,
+    val members = membersOpt.getOrElse(fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Seq("__domain"),
       shingleK, numHashes, bands, jacNum, jacDen))
     val fuzzyKeys = qualifiedFuzzyKeys(keys, members, idCol, minDocs)
       .withColumn("__fz", lit(1L))
@@ -717,7 +646,7 @@ object DomainStats {
     * boilerplate rule ([[templateStrip]]'s semantics), cross-domain
     * syndication stays dedup's job.
     *
-    * Scale shape: the clustering core is [[fuzzyClusterMembers]]; the
+    * Scale shape: the clustering core is [[fuzzyMembers]]; the
     * text-free paragraph rows are pinned (THREE consumers — exact agg,
     * cluster qualification, dropped-occurrence join — the §8.16 rule);
     * the union of exact + fuzzy keys is hash-cardinality; the rebuild is
@@ -740,8 +669,8 @@ object DomainStats {
       .agg(countDistinct(col(idCol)).as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select("__domain", "ph")
-    val members = membersOpt.getOrElse(fuzzyClusterMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain), idCol,
+    val members = membersOpt.getOrElse(fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Seq("__domain"),
       shingleK, numHashes, bands, jacNum, jacDen))
     val allKeys = exactKeys
       .union(qualifiedFuzzyKeys(rows, members, idCol, minDocs))
@@ -928,7 +857,7 @@ object DomainStats {
     * Output shape follows [[cleanTokenStatsV2]] plus `n_fuzzy_dropped`.
     *
     * Scale shape: ONE extra chunk pass over the population (the
-    * clustering core needs paragraph text; [[globalFuzzyMembers]]'
+    * clustering core needs paragraph text; [[fuzzyMembers]]'
     * distinct-ph min() agg is the only place text shuffles); the member
     * attribution window is cluster-keyed over text-free rows; drop keys
     * ride (id, para_idx) pairs back into the ONE precedence core.
@@ -943,8 +872,8 @@ object DomainStats {
       minDocs: Int = 3, minDomains: Int = 3, grain: Int = 8,
       shingleK: Int = 1, numHashes: Int = 64, bands: Int = 16,
       jacNum: Int = 4, jacDen: Int = 5): DataFrame = {
-    val members = globalFuzzyMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain),
+    val members = fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Nil,
       shingleK, numHashes, bands, jacNum, jacDen)
     cleanTokenCore(docs, urlCol, idCol, textCol, minDocs,
       Some(minDomains), grain, fuzzyMembers = Some(members))
@@ -1075,80 +1004,6 @@ object DomainStats {
           .cast("long"))
   }
 
-  /** FUZZY syndication catalog — the near-dup completion of
-    * [[syndicationCatalog]], closing the gap between it and
-    * [[fuzzyTemplateCatalog]]: press-wire copy that copiers lightly EDIT
-    * (a swapped dateline, a localized intro, a trimmed final sentence)
-    * never shares a hash across domains, so the exact catalog cannot
-    * group it — and the fuzzy TEMPLATE family deliberately clusters
-    * per-domain, so it cannot see it either. Here the near-dup
-    * clustering runs GLOBALLY (the phenomenon IS cross-domain), and a
-    * cluster is reported when its members' occurrences span
-    * >= `minDomains` DISTINCT registered domains AND it has >= 2
-    * variants (a single cross-domain recurring hash is the exact
-    * catalog's row, not ours). Attribution is the first occurrence by
-    * (doc id, position) over ALL member occurrences — the probable
-    * origin, which keeps its copies under [[syndicationStrip]]-style
-    * keep-origin economics.
-    *
-    * Operating point follows [[fuzzyTemplateCatalog]] (coarse `grain`,
-    * small `shingleK`, exact integer cross-multiplied Jaccard); the
-    * single-hot-bucket escape hatch documented on
-    * [[fuzzyClusterMembers]] applies unchanged — global banding only
-    * removes the domain from the bucket key, it does not change the
-    * in-bucket quadratic's bound or the size-ratio prefilter.
-    *
-    * Scale shape: paragraph text shuffles ONCE (the global distinct-ph
-    * agg); signatures/bands are map-side kernels over the pinned
-    * distinct frame; the LSH self-join is banded; CC runs on
-    * xxhash64(ph) longs (collision guard folded into the plan, the
-    * [[fuzzyClusterMembers]] posture); occurrence counts and the
-    * attribution window ride text-free (id, domain, ph, n_tok, idx)
-    * rows. Output: cluster (min member ph), representative paragraph,
-    * origin_domain, n_variants, n_domains, n_docs, n_occurrences,
-    * total_tokens. */
-  /** GLOBAL near-dup paragraph cluster membership `(ph, para,
-    * cluster_id)` — [[fuzzyClusterMembers]] minus the domain key, the
-    * clustering core shared by [[fuzzySyndicationCatalog]] and
-    * [[fuzzySyndicationStrip]]. Text crosses once (the distinct-ph
-    * min() agg); the frame is pinned for the banded self-join, both
-    * verify joins and the membership join; CC runs on xxhash64(ph)
-    * longs with the plan-folded collision guard. */
-  private def globalFuzzyMembers(
-      occ: DataFrame, shingleK: Int, numHashes: Int, bands: Int,
-      jacNum: Int, jacDen: Int): DataFrame = {
-    // same shape as [[fuzzyClusterMembers]] minus the domain key: the
-    // pinned distinct frame carries the sorted hashed token set `v`, the
-    // banded self-join and verify lookups ride xxhash64(ph) longs (see
-    // [[fuzzyVerifiedEdges]]); measured at sf0.1 this build's candidate
-    // explosion is 9.2 M pairs from 18.5 k paragraphs with 21.7 k
-    // verified survivors — the candidate frame is the thing not to
-    // shuffle, and the old md5-string chain shuffled it three times
-    // (distinct + two verify joins, 212 MB).
-    val dp = occ.groupBy("ph")
-      .agg(min(col("__para")).as("para"))
-      .withColumn("sh",
-        array_distinct(TextAnalysis.shingles(col("para"), shingleK)))
-      .withColumn("v", sort_array(transform(col("sh"), t => xxhash64(t))))
-      .withColumn("bandkeys", TextAnalysis.minhashBands(
-        TextAnalysis.minhashSignature(col("sh"), numHashes),
-        bands, numHashes / bands))
-      .drop("sh")
-      .localCheckpoint()
-    val edges = fuzzyVerifiedEdges(dp, xxhash64(col("ph")), Nil,
-      jacNum, jacDen)
-    val cc = Dedup.connectedComponents(edges)
-    // dp is one row per ph by construction — hashKeyGuarded's count
-    // equality is exactly xxhash64(ph) collision-freedom
-    hashKeyGuarded(dp, xxhash64(col("ph")),
-      "xxhash64(ph) collision: global fuzzy clustering would merge " +
-        "unrelated clusters — use string-keyed CC for this corpus") {
-      dp.withColumn("id", xxhash64(col("ph")))
-        .join(cc, Seq("id"))
-        .select(col("ph"), col("para"), col("cluster_id"))
-    }
-  }
-
   /** The per-domain fuzzy clustering frame `(__domain, ph, para,
     * cluster_id)` exposed as a standalone builder, so a harness can
     * compute the clustering ONCE and inject it into
@@ -1169,8 +1024,8 @@ object DomainStats {
       docs: DataFrame, urlCol: String, idCol: String, textCol: String,
       grain: Int = 16, shingleK: Int = 1, numHashes: Int = 64,
       bands: Int = 16, jacNum: Int = 4, jacDen: Int = 5): DataFrame =
-    fuzzyClusterMembers(paraOcc(docs, urlCol, idCol, textCol, grain),
-      idCol, shingleK, numHashes, bands, jacNum, jacDen)
+    fuzzyMembers(paraOcc(docs, urlCol, idCol, textCol, grain),
+      Seq("__domain"), shingleK, numHashes, bands, jacNum, jacDen)
 
   /** The GLOBAL fuzzy clustering frame `(ph, para, cluster_id)` as a
     * standalone builder — [[domainFuzzyMembers]]' cross-domain twin for
@@ -1185,14 +1040,42 @@ object DomainStats {
       docs: DataFrame, urlCol: String, idCol: String, textCol: String,
       grain: Int = 16, shingleK: Int = 1, numHashes: Int = 64,
       bands: Int = 16, jacNum: Int = 4, jacDen: Int = 5): DataFrame =
-    globalFuzzyMembers(paraOcc(docs, urlCol, idCol, textCol, grain),
-      shingleK, numHashes, bands, jacNum, jacDen)
+    fuzzyMembers(paraOcc(docs, urlCol, idCol, textCol, grain),
+      Nil, shingleK, numHashes, bands, jacNum, jacDen)
 
-  /** GLOBAL near-dup syndication catalog: cluster paragraph variants
-    * across ALL domains ([[globalFuzzyMembersFrame]]'s clustering, or an
-    * injected `membersOpt`), qualify on >= `minDomains` distinct
-    * registered domains AND >= 2 variants, attribute each cluster to its
-    * first-occurrence domain.
+  /** FUZZY syndication catalog — the near-dup completion of
+    * [[syndicationCatalog]], closing the gap between it and
+    * [[fuzzyTemplateCatalog]]: press-wire copy that copiers lightly EDIT
+    * (a swapped dateline, a localized intro, a trimmed final sentence)
+    * never shares a hash across domains, so the exact catalog cannot
+    * group it — and the fuzzy TEMPLATE family deliberately clusters
+    * per-domain, so it cannot see it either. Here the near-dup
+    * clustering runs GLOBALLY (the phenomenon IS cross-domain), and a
+    * cluster is reported when its members' occurrences span
+    * >= `minDomains` DISTINCT registered domains AND it has >= 2
+    * variants (a single cross-domain recurring hash is the exact
+    * catalog's row, not ours). Attribution is the first occurrence by
+    * (doc id, position) over ALL member occurrences — the probable
+    * origin, which keeps its copies under [[syndicationStrip]]-style
+    * keep-origin economics.
+    *
+    * Operating point follows [[fuzzyTemplateCatalog]] (coarse `grain`,
+    * small `shingleK`, exact integer cross-multiplied Jaccard); the
+    * single-hot-bucket escape hatch documented on
+    * [[fuzzyMembers]] applies unchanged — global banding only
+    * removes the domain from the bucket key, it does not change the
+    * in-bucket quadratic's bound or the size-ratio prefilter.
+    *
+    * Scale shape: paragraph text shuffles ONCE (the global distinct-ph
+    * agg); signatures/bands are map-side kernels over the pinned
+    * distinct frame; the LSH self-join is banded; CC runs on
+    * xxhash64(ph) longs (collision guard folded into the plan, the
+    * [[fuzzyMembers]] posture); occurrence counts and the
+    * attribution window ride text-free (id, domain, ph, n_tok, idx)
+    * rows. Output: cluster (min member ph), representative paragraph,
+    * origin_domain, n_variants, n_domains, n_docs, n_occurrences,
+    * total_tokens. The clustering is [[globalFuzzyMembersFrame]]'s, or
+    * an injected `membersOpt`.
     *
     * @note the 64-bit hash-key collision guard in the clustering core
     *       is plan-folded: it fires at EXECUTION time, surfaced as a
@@ -1205,8 +1088,8 @@ object DomainStats {
       numHashes: Int = 64, bands: Int = 16,
       jacNum: Int = 4, jacDen: Int = 5,
       membersOpt: Option[DataFrame] = None): DataFrame = {
-    val members = membersOpt.getOrElse(globalFuzzyMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain),
+    val members = membersOpt.getOrElse(fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Nil,
       shingleK, numHashes, bands, jacNum, jacDen))
     val keys = occKeys(docs, urlCol, idCol, textCol, grain)
     val mocc = keys.join(members.select("ph", "cluster_id"), Seq("ph"))
@@ -1243,7 +1126,7 @@ object DomainStats {
     * catalog→strip symmetry: templates q311→q312, fuzzy templates
     * q313→q316, exact syndication q318→q321, fuzzy syndication here.
     *
-    * Scale shape: the clustering core is [[globalFuzzyMembers]]; the
+    * Scale shape: the clustering core is [[fuzzyMembers]]; the
     * attributed occurrence frame is pinned (TWO consumers — the
     * qualification agg and the dropped-occurrence join, the §8.16
     * rule); drop decisions ride (id, para_idx) lists into the shared
@@ -1260,8 +1143,8 @@ object DomainStats {
       numHashes: Int = 64, bands: Int = 16,
       jacNum: Int = 4, jacDen: Int = 5,
       membersOpt: Option[DataFrame] = None): DataFrame = {
-    val members = membersOpt.getOrElse(globalFuzzyMembers(
-      paraOcc(docs, urlCol, idCol, textCol, grain),
+    val members = membersOpt.getOrElse(fuzzyMembers(
+      paraOcc(docs, urlCol, idCol, textCol, grain), Nil,
       shingleK, numHashes, bands, jacNum, jacDen))
     val dropped = fuzzyKeepOriginDrops(
       occKeys(docs, urlCol, idCol, textCol, grain)
@@ -1383,11 +1266,8 @@ object DomainStats {
         count(lit(1)).as("n_occ"),
         min(struct(col(idCol).cast("long").as("d"), col("para_idx").as("i"),
           col("__domain").as("dom"))).as("__fk"))
-      .withColumn("sh",
-        array_distinct(TextAnalysis.shingles(col("para"), shingleK)))
-      .withColumn("bandkeys", TextAnalysis.minhashBands(
-        TextAnalysis.minhashSignature(col("sh"), numHashes),
-        bands, numHashes / bands))
+      .withColumn("sh", SimJoin.shingleSet(col("para"), shingleK))
+      .withColumn("bandkeys", SimJoin.bandKeysOf(col("sh"), numHashes, bands))
       .select(col("ph"), col("para"), col("sh"), col("bandkeys"),
         col("domains"), col("n_occ"), col("__fk.d").as("first_doc"),
         col("__fk.i").as("first_idx"), col("__fk.dom").as("first_domain"))
@@ -1434,40 +1314,30 @@ object DomainStats {
       numHashes: Int = 64, bands: Int = 16,
       jacNum: Int = 4, jacDen: Int = 5): DataFrame = {
     // duplicate ph generations (appended batches) re-aggregate: domain
-    // sets union, first keys re-min, signatures identical per ph
-    val ix = index.groupBy("ph")
-      .agg(min(col("sh")).as("ish"), min(col("bandkeys")).as("ibk"),
+    // sets union, first keys re-min, signatures identical per ph; the
+    // string shingle set is hashed into the kernel's verify form here
+    val ix = SimJoin.pin(index.groupBy("ph")
+      .agg(min(col("sh")).as("__ish"), min(col("bandkeys")).as("bandkeys"),
         array_distinct(flatten(collect_list(col("domains")))).as("domains"),
         min(struct(col("first_doc").as("d"), col("first_idx").as("i"),
           col("first_domain").as("dom"))).as("__fk"))
-      .withColumnRenamed("ph", "iph")
-      .localCheckpoint() // band explode + verify + neighborhood stats
+      .withColumnRenamed("ph", "k")
+      .withColumn("v", SimJoin.hashedSet(col("__ish")))
+      .withColumn("n", size(col("__ish")))
+      .drop("__ish")) // band explode + verify + neighborhood stats
     val bOcc = occWithText(batch, urlCol, idCol, textCol, grain)
       .localCheckpoint() // variant distinct + drop join
-    val bv = bOcc.groupBy("ph")
-      .agg(min(col("__para")).as("para"))
-      .withColumn("bsh",
-        array_distinct(TextAnalysis.shingles(col("para"), shingleK)))
-      .withColumn("bbk", TextAnalysis.minhashBands(
-        TextAnalysis.minhashSignature(col("bsh"), numHashes),
-        bands, numHashes / bands))
-      .localCheckpoint() // band explode + verify
-    val be = bv.select(col("ph").as("bph"),
-      posexplode(col("bbk")).as(Seq("band", "key")))
-    val ie = ix.select(col("iph"),
-      posexplode(col("ibk")).as(Seq("band", "key")))
-    val cand = be.join(ie, Seq("band", "key")).select("bph", "iph").distinct()
-    // exact verify on shingle sets — the in-corpus clustering's decider
-    // (band share is only the candidate generator); bph == iph (an exact
-    // replay of an indexed variant) is a valid self-match
-    val matches = cand
-      .join(bv.select(col("ph").as("bph"), col("bsh")), "bph")
-      .join(ix.select(col("iph"), col("ish")), "iph")
-      .filter(size(array_intersect(col("bsh"), col("ish"))) * jacDen >=
-        size(array_union(col("bsh"), col("ish"))) * jacNum)
-      .select("bph", "iph")
+    val bv = SimJoin.pin(SimJoin.prep(
+      bOcc.groupBy("ph").agg(min(col("__para")).as("para")),
+      Seq(col("ph").as("k")), col("para"), shingleK, numHashes, bands))
+    // exact Jaccard verify — the in-corpus clustering's decider (band
+    // share is only the candidate generator); bph == iph (an exact replay
+    // of an indexed variant) is a valid self-match
+    val matches = SimJoin.join(bv, ix, SimJoin.atLeast(jacNum, jacDen))
+      .select(col("k_a").as("bph"), col("k_b").as("iph"))
     val perB = matches
-      .join(ix.select(col("iph"), col("domains"), col("__fk")), "iph")
+      .join(ix.df.select(col("k").as("iph"), col("domains"), col("__fk")),
+        "iph")
       .groupBy("bph")
       .agg(array_distinct(flatten(collect_list(col("domains")))).as("cdoms"),
         (countDistinct(when(col("iph") =!= col("bph"), col("iph"))) + lit(1))

@@ -44,15 +44,11 @@ object Incremental {
     * downstream join — exactly the rescan the index exists to avoid. */
   def signatureIndex(
       corpus: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    val rows = numHashes / bands
+      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame =
     corpus.repartition(col(idCol))
-      .select(col(idCol).as("id"),
-        TextAnalysis.minhashSignature(
-          array_distinct(TextAnalysis.shingles(col(textCol), shingleK)),
-          numHashes).as("sig"))
-      .withColumn("bandkeys", TextAnalysis.minhashBands(col("sig"), bands, rows))
-  }
+      .select(col(idCol).as("id"), TextAnalysis.minhashSignature(
+        SimJoin.shingleSet(col(textCol), shingleK), numHashes).as("sig"))
+      .withColumn("bandkeys", SimJoin.bandKeys(col("sig"), numHashes, bands))
 
   /** Estimated Jaccard between two equal-length minhash signatures: the
     * fraction of agreeing slots (the standard unbiased minhash estimator),
@@ -76,17 +72,14 @@ object Incremental {
       threshold: Double = 0.8): DataFrame = {
     val inSigs = signatureIndex(incoming, idCol, textCol,
       shingleK, numHashes, bands).localCheckpoint()
-    val inBands = inSigs.select(col("id"),
-      posexplode(col("bandkeys")).as(Seq("band", "key")))
-    val ixBands = index.select(col("id").as("cid"),
-      posexplode(col("bandkeys")).as(Seq("band", "key")))
-    val candidates = inBands.join(ixBands, Seq("band", "key"))
-      .select("id", "cid").distinct()
-    val dupIds = candidates
-      .join(inSigs.select(col("id"), col("sig")), "id")
-      .join(index.select(col("id").as("cid"), col("sig").as("csig")), "cid")
+    // the kernel's candidate stage; no size-ratio prefilter — the verify
+    // is signature agreement, not exact Jaccard
+    val dupIds = SimJoin.candidates(inSigs.withColumnRenamed("id", "k"),
+        Some(index.withColumnRenamed("id", "k")))
+      .join(inSigs.select(col("id").as("k_a"), col("sig")), "k_a")
+      .join(index.select(col("id").as("k_b"), col("sig").as("csig")), "k_b")
       .filter(sigAgreement(col("sig"), col("csig")) >= threshold)
-      .select("id").distinct()
+      .select(col("k_a").as("id")).distinct()
     // dupIds is bounded by the batch size — AQE broadcasts it when small
     incoming.join(dupIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }

@@ -128,16 +128,35 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("minhash LSH recovers nearly all exact 3-gram near-dup pairs (recall)") {
-    // unblocked exact baseline (500 docs → cross join is fine in-test)
-    val sh = docs.select(col("doc_id"),
-      array_distinct(TextAnalysis.shingles(col("text"), 3)).as("sh"))
-    val exact = sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
-      .withColumn("j",
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Expression}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    // unblocked brute-force reference over ordered doc pairs (500 docs →
+    // cross join is fine in-test): STRING shingle sets, array_intersect /
+    // array_union Jaccard, and whether the pair shares a band key at the
+    // same band index
+    val sh = docs.select(col("doc_id"), (col("doc_id") % 3).as("bucket"),
+        (col("doc_id") % 2).as("side"),
+        array_distinct(TextAnalysis.shingles(col("text"), 3)).as("sh"))
+      .withColumn("bk", transform(SimJoin.bandKeysOf(col("sh"), 64, 16),
+        (k, i) => concat(i.cast("string"), lit(":"), k)))
+    case class Ref(a: Long, b: Long, bucketEq: Boolean, sides: (Long, Long),
+        inter: Int, union: Int, j: Double, banded: Boolean)
+    val ref = sh.as("a").join(sh.as("b"), col("a.doc_id") =!= col("b.doc_id"))
+      .select(col("a.doc_id"), col("b.doc_id"),
+        col("a.bucket") === col("b.bucket"), col("a.side"), col("b.side"),
+        size(array_intersect(col("a.sh"), col("b.sh"))),
+        size(array_union(col("a.sh"), col("b.sh"))),
         size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
-        size(array_union(col("a.sh"), col("b.sh"))))
-      .filter(col("j") >= 0.8)
-      .select(col("a.doc_id"), col("b.doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          size(array_union(col("a.sh"), col("b.sh"))),
+        arrays_overlap(col("a.bk"), col("b.bk")))
+      .filter(size(array_intersect(col("a.sh"), col("b.sh"))) * 10 >=
+        size(array_union(col("a.sh"), col("b.sh"))) * 7)
+      .collect().map(r => Ref(r.getLong(0), r.getLong(1), r.getBoolean(2),
+        (r.getLong(3), r.getLong(4)), r.getInt(5), r.getInt(6), r.getDouble(7),
+        r.getBoolean(8))).toSeq
+    val exact = ref.filter(r => r.a < r.b && r.j >= 0.8).map(r => (r.a, r.b)).toSet
     val lsh = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
         shingleK = 3, numHashes = 64, bands = 16, threshold = 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -147,6 +166,60 @@ class PipelineSpec extends SparkSpec {
     assert(recall >= 0.9, s"LSH recall $recall < 0.9 (|exact|=${exact.size}, |lsh|=${lsh.size})")
     // verification step guarantees precision: every returned pair is >= threshold
     assert((lsh -- exact).isEmpty, "verified LSH pairs must be true near-dups")
+    assert(lsh == ref.filter(r => r.a < r.b && r.banded && r.j >= 0.8)
+      .map(r => (r.a, r.b)).toSet, "the band-sharing exact pairs, no more, no fewer")
+
+    // the kernel in all three modes == the reference restricted to
+    // band-sharing pairs: equal pair sets, equal (inter, union), and
+    // bit-equal jaccard doubles
+    def kernel(out: DataFrame): Map[(Long, Long), (Int, Int, Long)] =
+      out.select(col("k_a"), col("k_b"), col("inter"), col("union"),
+          SimJoin.jaccard(col("inter"), col("union")))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) ->
+          (r.getInt(2), r.getInt(3), java.lang.Double.doubleToLongBits(r.getDouble(4))))
+        .toMap
+    def want(rs: Seq[Ref]): Map[(Long, Long), (Int, Int, Long)] =
+      rs.filter(_.banded).map(r => (r.a, r.b) ->
+        (r.inter, r.union, java.lang.Double.doubleToLongBits(r.j))).toMap
+    def sets(df: DataFrame, keys: Seq[org.apache.spark.sql.Column]) =
+      SimJoin.pin(SimJoin.prep(df, keys, col("text"), 3, 64, 16))
+    val self = kernel(SimJoin.selfJoin(
+      sets(docs, Seq(col("doc_id").as("k"))), SimJoin.atLeast(0.8)))
+    val selfWant = want(ref.filter(r => r.a < r.b && r.j >= 0.8))
+    assert(self.nonEmpty && self == selfWant, (self.toSet diff selfWant.toSet).take(5))
+    val bucketed = kernel(SimJoin.selfJoin(
+      sets(docs, Seq(col("doc_id").as("k"), (col("doc_id") % 3).as("bucket"))),
+      SimJoin.atLeast(4, 5), Seq("bucket")))
+    val bucketedWant = want(ref.filter(r =>
+      r.a < r.b && r.bucketEq && r.inter * 5 >= r.union * 4))
+    assert(bucketed.nonEmpty && bucketed == bucketedWant,
+      (bucketed.toSet diff bucketedWant.toSet).take(5))
+    val twoSided = kernel(SimJoin.join(
+      sets(docs.filter(col("doc_id") % 2 === 0), Seq(col("doc_id").as("k"))),
+      sets(docs.filter(col("doc_id") % 2 === 1), Seq(col("doc_id").as("k"))),
+      SimJoin.atLeast(0.8)))
+    val twoSidedWant = want(ref.filter(r => r.sides == ((0L, 1L)) && r.j >= 0.8))
+    assert(twoSided.nonEmpty && twoSided == twoSidedWant,
+      (twoSided.toSet diff twoSidedWant.toSet).take(5))
+
+    // the near-dup query frames verify through the merge kernel, never a
+    // string array_intersect
+    def planExprs(df: DataFrame): Seq[Expression] = {
+      df.collect()
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case s: QueryStageExec => walk(s.plan)
+        case o => o +: o.children.flatMap(walk)
+      }
+      walk(df.queryExecution.executedPlan).flatMap(_.expressions)
+        .flatMap(_.collect { case e => e })
+    }
+    for (q <- Seq("q55_minhash_lsh", "q285_near_dup_decontaminate",
+        "q330_fuzzy_synd_strip_incremental")) {
+      val ex = planExprs(SparkEntry.queries(q)(spark, dir))
+      assert(ex.exists(_.isInstanceOf[graft.functions.SortedIntersectSize]), q)
+      assert(!ex.exists(_.isInstanceOf[ArrayIntersect]), q)
+    }
   }
 
   test("simhash: near-identical docs land within small hamming distance") {

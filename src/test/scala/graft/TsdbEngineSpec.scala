@@ -628,6 +628,71 @@ class TsdbEngineSpec extends SparkSpec {
       "a batch landed in a garbage-collected generation")
   }
 
+  test("appends racing the first flush never lose rows (flush holds the table monitor)") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // no segment_duration: the first flush samples, sets it, and re-lays
+    // the table out while three writers keep appending (tags, ts) rows
+    val e = engine()
+    e.execute(
+      """CREATE TABLE fr (ts timestamp NOT NULL, host string TAG, v double,
+        | timestamp KEY(ts)) ENGINE=Analytic WITH (update_mode='overwrite')""".stripMargin)
+    val base = 1700000000000L
+    def batch(host: String, i: Int) = (0 until 10).map(j =>
+      (new java.sql.Timestamp(base + (i * 10 + j) * 10000L), host, j.toDouble))
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    def write(host: String, i: Int): Unit = {
+      val rows = batch(host, i)
+      e.append("fr", rows.toDF("ts", "host", "v"))
+      rows.foreach(r => acked.add((host, r._1.getTime)))
+    }
+    write("seed", 0)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val started = new java.util.concurrent.CountDownLatch(3)
+    val writers = (0 until 3).map { w =>
+      new Thread(() => try {
+        (0 until 8).foreach { i => write(s"h$w", i); if (i == 0) started.countDown() }
+      } catch { case t: Throwable => failure.set(t); started.countDown() })
+    }
+    writers.foreach(_.start())
+    started.await()
+    e.flush("fr")
+    writers.foreach(_.join())
+    Option(failure.get()).foreach(t => fail("a writer failed", t))
+    assert(e.catalog.get("fr").options.segmentDuration.nonEmpty)
+    val got = e.read("fr").select(col("host"), unix_millis(col("ts")))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val lost = acked.asScala.toSet -- got
+    assert(lost.size == 0, s"of ${acked.size} acknowledged rows, e.g. ${lost.take(3)}")
+  }
+
+  test("DROP TABLE clears GC timestamps: a recreated table keeps its grace") {
+    val ddl =
+      """CREATE TABLE rc (ts timestamp NOT NULL, v double, timestamp KEY(ts))
+        | ENGINE=Analytic WITH (update_mode='overwrite')""".stripMargin
+    val e = engine()
+    // the first incarnation leaves supersession times that are long past
+    // any grace by the time the second one compacts
+    e.genGraceMs = 50
+    e.execute(ddl)
+    (1 to 3).foreach { i =>
+      e.execute(s"INSERT INTO rc (ts, v) VALUES ($i, 1.0)"); e.compact("rc")
+    }
+    Thread.sleep(100)
+    e.execute("DROP TABLE rc")
+    e.genGraceMs = 60000
+    e.execute(ddl)
+    val gen0 = new java.io.File(e.catalog.genDataDir("rc", 0))
+    (1 to 2).foreach { i =>
+      e.execute(s"INSERT INTO rc (ts, v) VALUES ($i, 2.0)"); e.compact("rc")
+    }
+    assert(gen0.exists(), "gen 0 of the new table must survive its grace period")
+    e.genGraceMs = 0
+    e.execute("INSERT INTO rc (ts, v) VALUES (3, 2.0)"); e.compact("rc")
+    assert(!gen0.exists(), "gen 0 must be GC'd once its grace has passed")
+    assert(e.read("rc").count() == 3)
+  }
+
   test("property: overwrite read == last-write-wins under random batches + compactions") {
     // randomized (seeded, deterministic) equivalence against a model: any
     // interleaving of multi-row inserts, duplicate PKs, and compactions
